@@ -532,7 +532,9 @@ case class SortedIntersectSize(left: Expression, right: Expression)
   * profile put gr4's whole cost in that one codegen'd intersect stage
   * (guide §4: cheapen the per-row kernel once the shape is right).
   * Inputs MUST be sorted and duplicate-free; the operator sorts at
-  * set-build time, never per pair.
+  * set-build time, never per pair. Inputs must also be typed null-free
+  * (`containsNull = false`, as `collect_list` output is): the merge
+  * reads elements as primitive longs, where a null would read as 0.
   */
 case class SortedLongIntersect(left: Expression, right: Expression)
   extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
@@ -543,8 +545,12 @@ case class SortedLongIntersect(left: Expression, right: Expression)
 
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
+      case (ArrayType(LongType, false), ArrayType(LongType, false)) =>
         TypeCheckResult.TypeCheckSuccess
+      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
+        TypeCheckResult.TypeCheckFailure(
+          "sorted_long_intersect needs null-free array<long> inputs " +
+            "(containsNull = false): a null element would read as 0")
       case (l, r) => TypeCheckResult.TypeCheckFailure(
         "sorted_long_intersect needs two array<long> inputs, got " +
           s"${l.simpleString} and ${r.simpleString}")

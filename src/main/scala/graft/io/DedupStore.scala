@@ -206,6 +206,12 @@ object DedupStore {
     */
   final case class FoldResult(applied: Boolean, batchRows: Long)
 
+  /** Why an append-only store refuses a backfill ([[EpochFence]]). */
+  private[io] val BackfillReason: String =
+    "the store already contains later survivors, so a backfilled batch " +
+      "would be deduped against the future; recompute the store in epoch " +
+      "order or re-stamp the batch with a current epoch"
+
   /** The last committed fold epoch: the [[EpochProperty]] table
     * property when present (O(1) catalog read), else a one-time
     * `max(_epoch)` scan for legacy stores.
@@ -325,15 +331,9 @@ object DedupStore {
       requireKnobsOn(meta, table, KnobsProperty,
         knobsValue(shingleN, numHashes, bands, mode), "dedup-store fold",
         requirePresent = false)
-      for (id <- epochId; c <- committedEpoch(spark, table)) {
-        if (c == id) return FoldResult(applied = false, batchRows = 0L)
-        if (c > id) throw new IllegalStateException(
-          s"dedup-store fold for '$table': batch epoch $id is OLDER than " +
-            s"the committed epoch $c — the store already contains later " +
-            "survivors, so a backfilled batch would be deduped against " +
-            "the future; recompute the store in epoch order or re-stamp " +
-            "the batch with a current epoch")
-      }
+      if (!EpochFence.admit("dedup-store fold", table, epochId,
+          committedEpoch(spark, table), BackfillReason))
+        return FoldResult(applied = false, batchRows = 0L)
     }
 
     val fresh =
@@ -389,12 +389,10 @@ object DedupStore {
       .withColumn("_epoch", lit(epochId.getOrElse(-1L)))
       .select("doc_id", "band_idx", "band_key", "sh", "_epoch")
 
-    // stage before touching the catalog: the survivor plan READS the
-    // store table it is about to append to. FOUNDING folds skip the
-    // stage outright (r19 optimization, guide §6): with exists=false
-    // the survivor plan reads no store table (fresh = banded), so the
-    // write-to-scratch + read-back cycle bought nothing — one direct
-    // write per store creation saved across every founding fold
+    // FOUNDING folds write directly: with exists=false the survivor
+    // plan reads no store table (fresh = banded) and is written once.
+    // Append folds go through the store append barrier
+    // (Rewrite.barrier: file sizing, and its crash posture)
     def writeTo(df: DataFrame): Unit = {
       val writer = df.write.mode(if (exists) SaveMode.Append
         else SaveMode.ErrorIfExists).format("parquet")
@@ -402,22 +400,7 @@ object DedupStore {
        else writer).saveAsTable(table)
     }
     if (!exists) writeTo(survivors)
-    else
-      // sever the read-own-table cycle IN MEMORY (r20, guide §6): the
-      // survivor plan reads the store it appends to, which saveAsTable
-      // refuses; an EAGER localCheckpoint materializes the survivors
-      // (memory-and-disk blocks) and swaps the plan for the
-      // checkpointed RDD, so the append no longer references the table
-      // — the same barrier the __maint_stage parquet round-trip
-      // provided, minus one parquet encode + write + read + fs delete
-      // per fold. Crash posture unchanged: a failure mid-append commits
-      // nothing under the writer's commit protocol either way, and the
-      // retry re-runs the whole fold behind the identity guard. Blocks
-      // are tracked and drain with the fold's cache mark; the write is
-      // re-packed to read-sized splits (packedForWrite — the file
-      // sizing the scratch read-back used to provide).
-      writeTo(org.apache.spark.sql.GraftColumnBridge.packedForWrite(
-        track(survivors.localCheckpoint(true))))
+    else writeTo(Rewrite.barrier(survivors))
     // stamp the committed epoch as a table property — the O(1) fence
     // read for every future fold (see EpochProperty) — and freeze the
     // key-affecting knobs (see KnobsProperty). ONE catalog round-trip

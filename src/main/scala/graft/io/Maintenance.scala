@@ -17,9 +17,10 @@ object Maintenance {
     * the classic streaming/incremental-append pathology — thousands of
     * kilobyte files turn every scan into a file-listing and task-
     * scheduling storm; nightly compaction restores scan-sized files.
-    * Staged rewrite (a table cannot feed its own overwrite), atomic at
-    * the catalog-pointer level like [[Upsert.upsertTable]]; a real
-    * table format makes the swap transactional. `repartition` (not
+    * A [[Rewrite.overwrite]] (a table cannot feed its own overwrite),
+    * so the partition spec, bucket spec and `graft.*` properties
+    * survive; a real table format makes the swap transactional.
+    * `repartition` (not
     * `coalesce`) so the rewrite redistributes evenly — coalesce would
     * glue existing small files into uneven unions and keep skew.
     *
@@ -32,14 +33,10 @@ object Maintenance {
     val before = spark.table(table).inputFiles.length
     val n = spark.table(table).count()
     val parts = math.max(1, math.ceil(n.toDouble / targetRowsPerFile).toInt)
-    // a compaction must preserve the table's layout spec — a plain
-    // saveAsTable would silently drop the partition spec (and with it
-    // partition pruning for every later scan — round-10 advice) AND the
-    // bucket spec (and with it shuffle-free bucketed joins, the same
-    // bug one shelf over); read both from the catalog and re-apply
-    val specs = captureSpecs(spark, table)
-    val partCols = specs.partCols
-    val bucketSpec = specs.bucketSpec
+    val meta = spark.sessionState.catalog.getTableMetadata(
+      spark.sessionState.sqlParser.parseTableIdentifier(table))
+    val partCols = meta.partitionColumnNames
+    val bucketSpec = meta.bucketSpec
     // a partition spec clusters the rewrite by ITS columns and a bucket
     // spec prescribes its own placement — a caller-requested range
     // clustering would silently fight either; refuse, never reorder
@@ -47,8 +44,6 @@ object Maintenance {
       s"clusterBy is only for unpartitioned, unbucketed tables; " +
         s"'$table' has partition=[${partCols.mkString(",")}] " +
         s"bucket=${bucketSpec.isDefined}")
-    val scratch = s"${spark.conf.get("spark.sql.warehouse.dir")}/__compact_stage/" +
-      table.replace('.', '_')
     // partitioned tables cluster the rewrite BY the partition columns so
     // each partition value lands in FEW tasks (a round-robin repartition
     // would make every task write a sliver of every value — parts ×
@@ -98,93 +93,32 @@ object Maintenance {
           .repartitionByRange(parts, clusterBy.map(col): _*)
           .sortWithinPartitions(clusterBy.map(col): _*)
       else spark.table(table).repartition(parts)
-    clustered.write.mode(SaveMode.Overwrite).parquet(scratch)
     // the salt gives the hot value TASK parallelism; hash collisions can
     // still co-locate salt groups in one task, so the FILE-size contract
     // is enforced directly by the writer — a task holding k·target rows
-    // of one value rolls k files
-    val reread = spark.read.parquet(scratch)
-    // the scratch read may PACK several small files into one task
-    // (maxPartitionBytes), which would mix ranges back together in the
-    // final files — re-apply the range placement on the final write so
-    // the on-disk layout, not just the scratch, is clustered
-    val finalFrame =
-      if (clusterBy.nonEmpty)
-        reread.repartitionByRange(parts, clusterBy.map(col): _*)
-          .sortWithinPartitions(clusterBy.map(col): _*)
-      else reread
-    specPreservingWrite(spark, table, finalFrame, specs,
-      _.option("maxRecordsPerFile", targetRowsPerFile))
+    // of one value rolls k files. The staged read may PACK several small
+    // files into one task (maxPartitionBytes), which would mix ranges
+    // back together in the final files — re-apply the range placement
+    // on the final write so the on-disk layout, not just the stage, is
+    // clustered
+    Rewrite.overwrite(spark, "__compact_stage", table, clustered,
+      maxRecordsPerFile = targetRowsPerFile,
+      layout = df =>
+        if (clusterBy.isEmpty) df
+        else df.repartitionByRange(parts, clusterBy.map(col): _*)
+          .sortWithinPartitions(clusterBy.map(col): _*))
     (before, spark.table(table).inputFiles.length)
   }
-
-  /** Catalog layout captured before a destructive rewrite: the
-    * partition columns, bucket spec, and `graft.*` table properties a
-    * plain `saveAsTable(Overwrite)` silently drops (the graft
-    * namespace carries load-bearing state — the dedup stores' O(1)
-    * epoch fence rides `graft.dedupstore.epoch`).
-    */
-  private[io] final case class TableSpecs(
-      partCols: Seq[String],
-      bucketSpec: Option[org.apache.spark.sql.catalyst.catalog.BucketSpec],
-      graftProps: Map[String, String])
-
-  private[io] def captureSpecs(spark: SparkSession, table: String): TableSpecs = {
-    val partCols = spark.catalog.listColumns(table).collect()
-      .filter(_.isPartition).map(_.name).toSeq
-    val tableMeta = spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table))
-    TableSpecs(partCols, tableMeta.bucketSpec,
-      tableMeta.properties.filter { case (k, _) => k.startsWith("graft.") })
-  }
-
-  /** The spec-preserving rewrite tail SHARED by [[compact]] and
-    * [[pruneStore]] (one copy, so the contract cannot diverge —
-    * round-16 review): overwrite `table` with `frame`, re-applying the
-    * captured partition/bucket specs, re-stamping the `graft.*`
-    * properties, and refreshing the caller session's file index.
-    */
-  private[io] def specPreservingWrite(spark: SparkSession, table: String,
-      frame: DataFrame, specs: TableSpecs,
-      tweak: org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row] =>
-        org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row] =
-        identity): Unit = {
-    val w0 = tweak(frame.write.mode(SaveMode.Overwrite).format("parquet"))
-    val w1 =
-      if (specs.partCols.nonEmpty) w0.partitionBy(specs.partCols: _*) else w0
-    val w = specs.bucketSpec.fold(w1) { bs =>
-      val bucketed = w1.bucketBy(bs.numBuckets,
-        bs.bucketColumnNames.head, bs.bucketColumnNames.tail: _*)
-      if (bs.sortColumnNames.nonEmpty)
-        bucketed.sortBy(bs.sortColumnNames.head, bs.sortColumnNames.tail: _*)
-      else bucketed
-    }
-    w.saveAsTable(table)
-    for ((k, v) <- specs.graftProps)
-      spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES " +
-        s"('${sqlLit(k)}' = '${sqlLit(v)}')")
-    spark.catalog.refreshTable(table)
-  }
-
-  /** Escapes a string for interpolation into a single-quoted SQL
-    * literal — the re-stamped `graft.*` property values are
-    * user-extensible (any string survives a compaction round-trip), so
-    * a value carrying a quote OR a backslash (the parser's escape
-    * character: an unescaped trailing backslash swallows the closing
-    * quote) must not break the ALTER TABLE statement.
-    */
-  def sqlLit(s: String): String =
-    s.replace("\\", "\\\\").replace("'", "''")
 
   /** VACUUM for the staging plane: the merge/CDC/compaction sinks
     * stage through scratch directories under the warehouse
     * (`__upsert_stage`, `__cdc_stage`, `__compact_stage`,
-    * `__evolve_stage`, `__maint_stage`); each is transient by contract
-    * (the NEXT run of the same table overwrites it) but a crashed or
-    * final run leaves the last copy on disk forever. This deletes the
-    * staging roots — safe by construction because no table ever
+    * `__maint_stage`, …, all under [[Rewrite.dir]]); each is transient
+    * by contract (the NEXT run of the same table overwrites it) but a
+    * crashed or final run leaves the last copy on disk forever. This
+    * deletes the staging roots — safe by construction because no table ever
     * references staged files (every sink reads the stage back and
-    * writes a fresh catalog copy; the Delta-VACUUM orphan-detection
+    * writes the table's own files; the Delta-VACUUM orphan-detection
     * problem doesn't arise when staging is namespaced). ORDERING
     * contract for the declarative plane: schedule this AFTER the
     * rewrite tasks (compact / prune_store) in the same config —
@@ -232,9 +166,9 @@ object Maintenance {
     * `_epoch` filter, touching no codes/bands/cells, and the vector
     * store's frozen `<table>_model` sibling is never touched.
     *
-    * Staged spec-preserving rewrite (the compact machinery's
-    * contract): partition spec, bucket spec, and `graft.*` table
-    * properties — including the epoch fence — all survive. Returns
+    * A [[Rewrite.overwrite]]: partition spec, bucket spec, and
+    * `graft.*` table properties — including the epoch fence — all
+    * survive. Returns
     * (rows deleted, rows kept).
     */
   def pruneStore(spark: SparkSession, table: String,
@@ -251,18 +185,8 @@ object Maintenance {
           "never folded) — nothing to anchor the retention window"))
     val cutoff = committed - keepEpochs // survivors: _epoch > cutoff
     val total = t0.count()
-    val specs = captureSpecs(spark, table)
-    val scratch = s"${spark.conf.get("spark.sql.warehouse.dir")}/__prune_stage/" +
-      table.replace('.', '_')
-    t0.filter(col("_epoch") > cutoff)
-      .write.mode(SaveMode.Overwrite).parquet(scratch)
-    // the staged survivors are deliberately LEFT ON DISK (the
-    // vacuum_staging contract, same as compact's stage): the overwrite
-    // below is destructive, and if it dies midway the stage is the
-    // only complete copy of the surviving rows — an eager delete here
-    // was a review-caught data-loss window. The next prune of the same
-    // table overwrites it; vacuum_staging sweeps the rest.
-    specPreservingWrite(spark, table, spark.read.parquet(scratch), specs)
+    Rewrite.overwrite(spark, "__prune_stage", table,
+      t0.filter(col("_epoch") > cutoff))
     val kept = spark.table(table).count()
     (total - kept, kept)
   }
@@ -322,23 +246,13 @@ object Maintenance {
     // silent drop would be data loss dressed as success (round-11
     // advice: the audit row would record SUCCESS with 0 records) — it
     // fails loudly so the layer's per-item isolation surfaces it.
-    val standingEpoch: Option[Long] =
-      if (spark.table(table).columns.contains("_last_epoch")) {
-        val m = spark.table(table).agg(max(col("_last_epoch"))).head()
-        if (m.isNullAt(0)) None else Some(m.getLong(0))
-      } else None
-    for (id <- epochId; committed <- standingEpoch) {
-      if (committed == id) return false
-      if (committed > id) throw new IllegalStateException(
-        s"additive fold for '$table': batch epoch $id is OLDER than the " +
-          s"committed epoch $committed — a late backfill cannot fold " +
-          "additively without double-count risk; recompute the table or " +
-          "re-stamp the batch with a current epoch")
-    }
-    val scratch = s"${spark.conf.get("spark.sql.warehouse.dir")}/__maint_stage/" +
-      table.replace('.', '_')
-    batchAgg.write.mode(SaveMode.Overwrite).parquet(s"$scratch/batch")
-    val b = spark.read.parquet(s"$scratch/batch").alias("b")
+    val standingEpoch = EpochFence.lastEpoch(spark.table(table))
+    if (!EpochFence.admit("additive fold", table, epochId, standingEpoch,
+        "a late backfill cannot fold additively without double-count " +
+          "risk; recompute the table or re-stamp the batch with a " +
+          "current epoch")) return false
+    val b = Rewrite.stage(spark, "__maint_stage", table, "batch", batchAgg)
+      .alias("b")
     val t = spark.table(table).alias("t")
     // NULL-SAFE key match (<=>): groupBy emits a null-key group per
     // batch, and a plain USING full_outer never matches null keys —
@@ -356,13 +270,13 @@ object Maintenance {
     val merged = joined.select(
       keys.map(k => coalesce(t(k), b(k)).as(k)) ++
         (sumCols :+ "n_rows").map { c =>
-          (coalesce(t(c), lit(0)) + coalesce(b(c), lit(0))).as(c)
+          // the standing type: a decimal sum would otherwise widen by
+          // one digit per fold, which the rewrite refuses
+          (coalesce(t(c), lit(0)) + coalesce(b(c), lit(0)))
+            .cast(t.schema(c).dataType).as(c)
         } ++
         keepEpoch.map(id => lit(id).as("_last_epoch")).toSeq: _*)
-    merged.write.mode(SaveMode.Overwrite).parquet(s"$scratch/merged")
-    spark.read.parquet(s"$scratch/merged").write.mode(SaveMode.Overwrite)
-      .saveAsTable(table)
-    spark.catalog.refreshTable(table)
+    Rewrite.overwrite(spark, "__maint_stage", table, merged)
     true
   }
 
@@ -407,23 +321,13 @@ object Maintenance {
     // the SAME epoch fence as the additive fold (review finding): the
     // min/max fold is value-idempotent but n_rows is NOT — a same-epoch
     // replay (run-date retry) must no-op, an older epoch must fail loud
-    val standingEpoch: Option[Long] =
-      if (spark.table(table).columns.contains("_last_epoch")) {
-        val m = spark.table(table).agg(max(col("_last_epoch"))).head()
-        if (m.isNullAt(0)) None else Some(m.getLong(0))
-      } else None
-    for (id <- epochId; committed <- standingEpoch) {
-      if (committed == id) return false
-      if (committed > id) throw new IllegalStateException(
-        s"extremes fold for '$table': batch epoch $id is OLDER than the " +
-          s"committed epoch $committed — a late backfill cannot fold " +
-          "without double-counting n_rows; recompute the table or " +
-          "re-stamp the batch with a current epoch")
-    }
-    val scratch = s"${spark.conf.get("spark.sql.warehouse.dir")}/__maint_stage/" +
-      table.replace('.', '_')
-    batchAgg.write.mode(SaveMode.Overwrite).parquet(s"$scratch/batch")
-    val b = spark.read.parquet(s"$scratch/batch").alias("b")
+    val standingEpoch = EpochFence.lastEpoch(spark.table(table))
+    if (!EpochFence.admit("extremes fold", table, epochId, standingEpoch,
+        "a late backfill cannot fold without double-counting n_rows; " +
+          "recompute the table or re-stamp the batch with a current " +
+          "epoch")) return false
+    val b = Rewrite.stage(spark, "__maint_stage", table, "batch", batchAgg)
+      .alias("b")
     val t = spark.table(table).alias("t")
     val joined = t.join(b,
       keys.map(k => t(k) <=> b(k)).reduce(_ && _), "full_outer")
@@ -437,10 +341,7 @@ object Maintenance {
         ((coalesce(t("n_rows"), lit(0)) + coalesce(b("n_rows"), lit(0)))
           .as("n_rows") +:
           keepEpoch.map(id => lit(id).as("_last_epoch")).toSeq): _*)
-    merged.write.mode(SaveMode.Overwrite).parquet(s"$scratch/merged")
-    spark.read.parquet(s"$scratch/merged").write.mode(SaveMode.Overwrite)
-      .saveAsTable(table)
-    spark.catalog.refreshTable(table)
+    Rewrite.overwrite(spark, "__maint_stage", table, merged)
     true
   }
 
@@ -535,19 +436,11 @@ object Maintenance {
       s"join-view fold for '$table': the view was built without epoch " +
         "fencing and parquet appends cannot retrofit the marker column — " +
         "recreate the view with an epoch to fence replays")
-    val standingEpoch: Option[Long] =
-      if (hasMarker) {
-        val m = spark.table(table).agg(max(col("_last_epoch"))).head()
-        if (m.isNullAt(0)) None else Some(m.getLong(0))
-      } else None
-    for (id <- epochId; committed <- standingEpoch) {
-      if (committed == id) return false
-      if (committed > id) throw new IllegalStateException(
-        s"join-view fold for '$table': batch epoch $id is OLDER than the " +
-          s"committed epoch $committed — a late backfill cannot append " +
-          "without double-join risk; recompute the view or re-stamp the " +
-          "batch with a current epoch")
-    }
+    val standingEpoch = EpochFence.lastEpoch(spark.table(table))
+    if (!EpochFence.admit("join-view fold", table, epochId, standingEpoch,
+        "a late backfill cannot append without double-join risk; " +
+          "recompute the view or re-stamp the batch with a current " +
+          "epoch")) return false
     val ddTerm = for (x <- dA; y <- dB) yield x.join(y, joinKeys)
     val dV = if (basesIncludeBatches) {
       // bases already hold the batches: ΔA⋈B and A⋈ΔB each contain
@@ -618,17 +511,11 @@ object Maintenance {
       s"distinct view '$table' was built with m=$standingM but this " +
         s"fold uses m=$m — different register spaces cannot merge; " +
         "recreate the view or restore the original hll_m")
-    val scratch = s"${spark.conf.get("spark.sql.warehouse.dir")}/__maint_stage/" +
-      table.replace('.', '_')
-    regs.write.mode(SaveMode.Overwrite).parquet(s"$scratch/batch")
-    val staged = spark.read.parquet(s"$scratch/batch")
-    t.select(regCols.map(col): _*).unionByName(staged)
-      .groupBy((keys :+ "bucket").map(col): _*).agg(max("rho").as("rho"))
-      .withColumn("_m", lit(m.toLong))
-      .write.mode(SaveMode.Overwrite).parquet(s"$scratch/merged")
-    spark.read.parquet(s"$scratch/merged").write.mode(SaveMode.Overwrite)
-      .saveAsTable(table)
-    spark.catalog.refreshTable(table)
+    val staged = Rewrite.stage(spark, "__maint_stage", table, "batch", regs)
+    Rewrite.overwrite(spark, "__maint_stage", table,
+      t.select(regCols.map(col): _*).unionByName(staged)
+        .groupBy((keys :+ "bucket").map(col): _*).agg(max("rho").as("rho"))
+        .withColumn("_m", lit(m.toLong)))
     true
   }
 
@@ -685,32 +572,17 @@ object Maintenance {
       s"'$table' is not this view's sketch shape: has " +
         s"[${t.columns.sorted.mkString(", ")}], expected " +
         s"[${regCols.sorted.mkString(", ")}] (+ optional _last_epoch)")
-    val standingEpoch: Option[Long] =
-      if (t.columns.contains("_last_epoch")) {
-        val m = t.agg(max(col("_last_epoch"))).head()
-        if (m.isNullAt(0)) None else Some(m.getLong(0))
-      } else None
-    for (id <- epochId; committed <- standingEpoch) {
-      if (committed == id) return false
-      if (committed > id) throw new IllegalStateException(
-        s"quantile fold for '$table': batch epoch $id is OLDER than the " +
-          s"committed epoch $committed — bucket counts add, a late " +
-          "backfill cannot fold without double-count risk; recompute " +
-          "the table or re-stamp the batch with a current epoch")
-    }
-    val scratch = s"${spark.conf.get("spark.sql.warehouse.dir")}/__maint_stage/" +
-      table.replace('.', '_')
-    regs0.write.mode(SaveMode.Overwrite).parquet(s"$scratch/batch")
-    val staged = spark.read.parquet(s"$scratch/batch")
+    val standingEpoch = EpochFence.lastEpoch(t)
+    if (!EpochFence.admit("quantile fold", table, epochId, standingEpoch,
+        "bucket counts add, a late backfill cannot fold without " +
+          "double-count risk; recompute the table or re-stamp the batch " +
+          "with a current epoch")) return false
+    val staged = Rewrite.stage(spark, "__maint_stage", table, "batch", regs0)
     val keepEpoch = epochId.orElse(standingEpoch)
     val merged0 = t.select(regCols.map(col): _*).unionByName(staged)
       .groupBy((keys :+ "bkey").map(col): _*).agg(sum("cnt").as("cnt"))
-    val merged = keepEpoch.fold(merged0)(id =>
-      merged0.withColumn("_last_epoch", lit(id)))
-    merged.write.mode(SaveMode.Overwrite).parquet(s"$scratch/merged")
-    spark.read.parquet(s"$scratch/merged").write.mode(SaveMode.Overwrite)
-      .saveAsTable(table)
-    spark.catalog.refreshTable(table)
+    Rewrite.overwrite(spark, "__maint_stage", table,
+      keepEpoch.fold(merged0)(id => merged0.withColumn("_last_epoch", lit(id))))
     true
   }
 

@@ -160,15 +160,9 @@ object MediaDedupStore {
           "store under the new layout")
       DedupStore.requireKnobsOn(meta, table, KnobsProperty,
         s"bands=$bands", "media-dedup-store fold", requirePresent = false)
-      for (id <- epochId; c <- DedupStore.committedEpoch(spark, table)) {
-        if (c == id) return DedupStore.FoldResult(applied = false, batchRows = 0L)
-        if (c > id) throw new IllegalStateException(
-          s"media-dedup-store fold for '$table': batch epoch $id is OLDER " +
-            s"than the committed epoch $c — the store already contains " +
-            "later survivors, so a backfilled batch would be deduped " +
-            "against the future; recompute the store in epoch order or " +
-            "re-stamp the batch with a current epoch")
-      }
+      if (!EpochFence.admit("media-dedup-store fold", table, epochId,
+          DedupStore.committedEpoch(spark, table), DedupStore.BackfillReason))
+        return DedupStore.FoldResult(applied = false, batchRows = 0L)
     }
 
     val fresh =
@@ -219,24 +213,16 @@ object MediaDedupStore {
       .withColumn("_epoch", lit(epochId.getOrElse(-1L)))
       .select("media_id", "band_idx", "band_key", "dhash", "_epoch")
 
-    // stage before touching the catalog: the survivor plan reads the
-    // store table it is about to append to. Founding folds write
-    // DIRECTLY (exists=false ⇒ fresh = banded reads no store table;
-    // the scratch round-trip bought nothing — DedupStore's r19 note)
+    // founding folds write DIRECTLY; append folds go through the store
+    // append barrier (Rewrite.barrier), as in the text store
     def writeTo(df: DataFrame): Unit = {
       val writer = df.write.mode(if (exists) SaveMode.Append
         else SaveMode.ErrorIfExists).format("parquet")
       (if (storeBuckets > 0) writer.bucketBy(storeBuckets, "band_key")
        else writer).saveAsTable(table)
     }
-    // append folds sever the read-own-table cycle with an EAGER
-    // localCheckpoint (r20, guide §6 — DedupStore's note): same
-    // barrier the __maint_stage parquet round-trip provided, minus a
-    // parquet encode + write + read + fs delete per fold; blocks are
-    // tracked and drain with the fold's cache mark
     if (!exists) writeTo(survivors)
-    else writeTo(org.apache.spark.sql.GraftColumnBridge.packedForWrite(
-      track(survivors.localCheckpoint(true))))
+    else writeTo(Rewrite.barrier(survivors))
     // one catalog round-trip for all properties (each ALTER is a
     // serial driver-side write)
     spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES (" +

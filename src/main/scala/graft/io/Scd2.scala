@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -98,15 +98,11 @@ object Scd2 {
       s"batch carries undeclared columns (silently dropping them would " +
         s"hide a config mistake): ${extra.mkString(", ")}")
 
-    val scratch =
-      s"${spark.conf.get("spark.sql.warehouse.dir")}/__scd2_stage/" +
-        table.replace('.', '_')
     // stage the raw batch FIRST: one evaluation of the (arbitrarily
     // expensive) source plan; validation, dedup and the chain all read
     // the staged copy
-    batch.select(declared.map(col): _*)
-      .write.mode(SaveMode.Overwrite).parquet(s"$scratch/raw")
-    val raw = spark.read.parquet(s"$scratch/raw")
+    val raw = Rewrite.stage(spark, "__scd2_stage", table, "raw",
+      batch.select(declared.map(col): _*))
     // one pass for both metadata counts (review finding: this runs per
     // streaming micro-batch). A NULL effective date has no place on a
     // time axis — it would sort first and silently pre-date every real
@@ -125,10 +121,9 @@ object Scd2 {
     // (highest tracked tuple — replays reproduce the same pick)
     val dupW = Window.partitionBy((keys :+ effectiveCol).map(col): _*)
       .orderBy(tracked.map(c => col(c).desc): _*)
-    raw.withColumn("_rn", row_number().over(dupW)).filter(col("_rn") === 1)
-      .drop("_rn")
-      .write.mode(SaveMode.Overwrite).parquet(s"$scratch/deduped")
-    val deduped = spark.read.parquet(s"$scratch/deduped")
+    val deduped = Rewrite.stage(spark, "__scd2_stage", table, "deduped",
+      raw.withColumn("_rn", row_number().over(dupW)).filter(col("_rn") === 1)
+        .drop("_rn"))
     val dedupedRows = deduped.count()
 
     val exists = spark.catalog.tableExists(table)
@@ -224,8 +219,8 @@ object Scd2 {
       .withColumn("valid_to", lead(col("_eff"), 1).over(chainW))
       .withColumn("is_current", col("valid_to").isNull)
       .drop("_eff")
-    chained.write.mode(SaveMode.Overwrite).parquet(s"$scratch/chained")
-    val survivors = spark.read.parquet(s"$scratch/chained")
+    val survivors = Rewrite.stage(spark, "__scd2_stage", table, "chained",
+      chained)
 
     val counts = survivors.agg(
       sum(when(!col("_standing"), 1L).otherwise(0L)).as("nv"),
@@ -236,7 +231,8 @@ object Scd2 {
 
     val outCols = (keys ++ tracked) ++ intervalCols
     val out = survivors.select(outCols.map(col): _*)
-    val merged = if (!exists) out else {
+    if (!exists) out.write.saveAsTable(table)
+    else {
       val target = spark.table(table)
       val touched = survivors.select(keys.map(col): _*).distinct()
       // history (non-current) rows pass through; current rows of
@@ -244,15 +240,12 @@ object Scd2 {
       val curBase = target.filter(col("is_current"))
       val untouchedCur =
         curBase.join(touched, keyCond(curBase, touched), "left_anti")
-      target.filter(!col("is_current"))
-        .unionByName(untouchedCur)
-        .select(outCols.map(col): _*)
-        .unionByName(out)
+      Rewrite.overwrite(spark, "__scd2_stage", table,
+        target.filter(!col("is_current"))
+          .unionByName(untouchedCur)
+          .select(outCols.map(col): _*)
+          .unionByName(out))
     }
-    merged.write.mode(SaveMode.Overwrite).parquet(s"$scratch/merged")
-    spark.read.parquet(s"$scratch/merged").write.mode(SaveMode.Overwrite)
-      .saveAsTable(table)
-    spark.catalog.refreshTable(table)
     Scd2Stats(rawRows, newVersions, closed, dedupedRows - newVersions)
   }
 
@@ -288,15 +281,8 @@ object Scd2 {
       s"'$table' is not an SCD2 table: missing ${intervalCols.mkString("/")}")
     val h = lit(horizon).cast(t.schema("valid_to").dataType)
     val before = t.count()
-    val scratch =
-      s"${spark.conf.get("spark.sql.warehouse.dir")}/__scd2_stage/" +
-        table.replace('.', '_')
-    t.filter(col("valid_to").isNull || col("valid_to") > h)
-      .write.mode(SaveMode.Overwrite).parquet(s"$scratch/pruned")
-    val kept = spark.read.parquet(s"$scratch/pruned")
-    val after = kept.count()
-    kept.write.mode(SaveMode.Overwrite).saveAsTable(table)
-    spark.catalog.refreshTable(table)
-    before - after
+    Rewrite.overwrite(spark, "__scd2_stage", table,
+      t.filter(col("valid_to").isNull || col("valid_to") > h))
+    before - spark.table(table).count()
   }
 }

@@ -1,7 +1,7 @@
 package graft.io
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.col
 
 /** Sink modes (reference operators K1–K6) on parquet catalog tables:
   * append, overwrite (optional partitionBy), and keyed upsert (the
@@ -45,21 +45,10 @@ object Sinks {
   def streamUpsert(stream: DataFrame, table: String, keys: Seq[String],
       checkpoint: String, availableNow: Boolean = true)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    foldEachBatch(stream, table, checkpoint, availableNow) {
+      (batch: DataFrame, _: Long) =>
         Upsert.upsertTable(batch.sparkSession, table, batch, keys)
-        // foreachBatch runs in a micro-batch CLONE of the session;
-        // upsertTable refreshed the clone's file-index cache, but the
-        // owning session (the one the user reads the table from) still
-        // holds the pre-overwrite index and would FILE_NOT_EXIST
-        stream.sparkSession.catalog.refreshTable(table)
-        ()
-      }
-    (if (availableNow)
-       writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-     else writer).start()
+    }
   }
 
   /** Streaming CDC sink: [[streamUpsert]]'s changelog twin — each
@@ -75,18 +64,11 @@ object Sinks {
       checkpoint: String, opCol: String = "op", seqCol: String = "seq",
       availableNow: Boolean = true)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    foldEachBatch(stream, table, checkpoint, availableNow) {
+      (batch: DataFrame, _: Long) =>
         Upsert.applyChangeLog(batch.sparkSession, table, batch, keys,
           opCol, seqCol)
-        stream.sparkSession.catalog.refreshTable(table)
-        ()
-      }
-    (if (availableNow)
-       writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-     else writer).start()
+    }
   }
 
   /** Streaming incremental gold: each micro-batch folds into a standing
@@ -101,8 +83,9 @@ object Sinks {
     * checkpoint's offset commit re-runs the epoch) — which is exactly
     * why Spark hands the sink a batchId. The sink therefore commits
     * the epoch id as a `_last_epoch` column in the SAME table write as
-    * the folded data and skips any epoch ≤ the committed one
-    * ([[Maintenance.maintainAdditiveAggregate]]'s `epochId`) — the
+    * the folded data, skips a replay of the committed epoch and refuses
+    * an older one ([[EpochFence]], via
+    * [[Maintenance.maintainAdditiveAggregate]]'s `epochId`) — the
     * parquet analog of the Delta `txnAppId`/`txnVersion` pattern, so
     * replays converge like the sibling sinks'. Per-batch cost
     * rides the BATCH (one map-side-combined aggregate + one keyed join
@@ -113,19 +96,12 @@ object Sinks {
       keys: Seq[String], sumCols: Seq[String], checkpoint: String,
       availableNow: Boolean = true)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    foldEachBatch(stream, table, checkpoint, availableNow) {
+      (batch: DataFrame, batchId: Long) =>
         Maintenance.maintainAdditiveAggregate(
           batch.sparkSession, table, batch, keys, sumCols,
           epochId = Some(batchId))
-        stream.sparkSession.catalog.refreshTable(table)
-        ()
-      }
-    (if (availableNow)
-       writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-     else writer).start()
+    }
   }
 
   /** Streaming twin of [[Maintenance.maintainInsertOnlyExtremes]] —
@@ -142,19 +118,12 @@ object Sinks {
       keys: Seq[String], minCols: Seq[String], maxCols: Seq[String],
       checkpoint: String, availableNow: Boolean = true)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    foldEachBatch(stream, table, checkpoint, availableNow) {
+      (batch: DataFrame, batchId: Long) =>
         Maintenance.maintainInsertOnlyExtremes(
           batch.sparkSession, table, batch, keys, minCols, maxCols,
           epochId = Some(batchId))
-        stream.sparkSession.catalog.refreshTable(table)
-        ()
-      }
-    (if (availableNow)
-       writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-     else writer).start()
+    }
   }
 
   /** Streaming twin of [[Maintenance.maintainDistinctView]]: per-key
@@ -171,18 +140,11 @@ object Sinks {
       keys: Seq[String], itemCol: String, checkpoint: String,
       m: Int = 64, availableNow: Boolean = true)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    foldEachBatch(stream, table, checkpoint, availableNow) {
+      (batch: DataFrame, _: Long) =>
         Maintenance.maintainDistinctView(
           batch.sparkSession, table, batch, keys, itemCol, m)
-        stream.sparkSession.catalog.refreshTable(table)
-        ()
-      }
-    (if (availableNow)
-       writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-     else writer).start()
+    }
   }
 
   /** Streaming twin of [[Maintenance.maintainQuantileView]]: per-key
@@ -195,19 +157,12 @@ object Sinks {
       keys: Seq[String], centsCol: String, checkpoint: String,
       availableNow: Boolean = true)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    foldEachBatch(stream, table, checkpoint, availableNow) {
+      (batch: DataFrame, batchId: Long) =>
         Maintenance.maintainQuantileView(
           batch.sparkSession, table, batch, keys, centsCol,
           epochId = Some(batchId))
-        stream.sparkSession.catalog.refreshTable(table)
-        ()
-      }
-    (if (availableNow)
-       writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-     else writer).start()
+    }
   }
 
   /** Streaming twin of [[DedupStore.maintain]] — the standing
@@ -229,20 +184,13 @@ object Sinks {
       availableNow: Boolean = true, keeper: String = "min_id",
       qualityCol: Option[String] = None)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    foldEachBatch(stream, table, checkpoint, availableNow) {
+      (batch: DataFrame, batchId: Long) =>
         DedupStore.maintain(batch.sparkSession, table, batch, idCol,
           textCol, shingleN, numHashes, bands, jaccardThreshold,
           maxBucketSize = maxBucketSize, storeBuckets = storeBuckets,
           epochId = Some(batchId), keeper = keeper, qualityCol = qualityCol)
-        stream.sparkSession.catalog.refreshTable(table)
-        ()
-      }
-    (if (availableNow)
-       writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-     else writer).start()
+    }
   }
 
   /** Streaming twin of [[MediaDedupStore.maintain]] — the perceptual-
@@ -261,20 +209,13 @@ object Sinks {
       availableNow: Boolean = true, keeper: String = "min_id",
       qualityCol: Option[String] = None)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    foldEachBatch(stream, table, checkpoint, availableNow) {
+      (batch: DataFrame, batchId: Long) =>
         MediaDedupStore.maintain(batch.sparkSession, table, batch,
           idCol, hashCol, bands, maxHamming,
           maxBucketSize = maxBucketSize, storeBuckets = storeBuckets,
           epochId = Some(batchId), keeper = keeper, qualityCol = qualityCol)
-        stream.sparkSession.catalog.refreshTable(table)
-        ()
-      }
-    (if (availableNow)
-       writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-     else writer).start()
+    }
   }
 
   /** Streaming twin of [[VectorDedupStore.maintain]] — the embedding
@@ -291,19 +232,12 @@ object Sinks {
       maxCellSize: Option[Long] = None,
       availableNow: Boolean = true, keeper: String = "min_id")
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    foldEachBatch(stream, table, checkpoint, availableNow) {
+      (batch: DataFrame, batchId: Long) =>
         VectorDedupStore.maintain(batch.sparkSession, table, batch,
           idCol, vecCol, minScore, numCentroids, nprobe, trainIters,
           maxCellSize, epochId = Some(batchId), keeper = keeper)
-        stream.sparkSession.catalog.refreshTable(table)
-        ()
-      }
-    (if (availableNow)
-       writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-     else writer).start()
+    }
   }
 
   /** Streaming SCD2 sink: each micro-batch of (keys, tracked,
@@ -323,12 +257,28 @@ object Sinks {
       tracked: Seq[String], effectiveCol: String, checkpoint: String,
       availableNow: Boolean = true)
       : org.apache.spark.sql.streaming.StreamingQuery = {
+    foldEachBatch(stream, table, checkpoint, availableNow) {
+      (batch: DataFrame, _: Long) =>
+        Scd2.merge(batch.sparkSession, table, batch, keys, tracked,
+          effectiveCol)
+    }
+  }
+
+  /** The foreachBatch body every streaming sink shares: run `fold` on
+    * each micro-batch, then refresh `table` in the OWNING session —
+    * foreachBatch runs in a micro-batch CLONE of the session, so the
+    * fold refreshed the clone's file-index cache, while the session the
+    * user reads the table from still holds the pre-write index and
+    * would FILE_NOT_EXIST.
+    */
+  private def foldEachBatch(stream: DataFrame, table: String,
+      checkpoint: String, availableNow: Boolean)(fold: (DataFrame, Long) => Any)
+      : org.apache.spark.sql.streaming.StreamingQuery = {
     val writer = stream.writeStream
       .outputMode("update")
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        Scd2.merge(batch.sparkSession, table, batch, keys, tracked,
-          effectiveCol)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        fold(batch, batchId)
         stream.sparkSession.catalog.refreshTable(table)
         ()
       }
@@ -347,9 +297,10 @@ object Sinks {
   * `Observation` counting its rows during that one write), then the
   * merge reads the staged copy: the anti-join and the union both
   * consume the source, so merging against the raw plan would compute an
-  * arbitrarily expensive model query twice. The merged remainder is
-  * likewise staged before the overwrite because Spark cannot overwrite
-  * a table that feeds the plan being written. Not concurrent-safe —
+  * arbitrarily expensive model query twice. The merge commits through
+  * [[Rewrite.overwrite]] (Spark cannot overwrite a table that feeds the
+  * plan being written), which keeps the table's partition spec, bucket
+  * spec and `graft.*` properties. Not concurrent-safe —
   * matching the single-driver reference. At real scale this becomes:
   * write a new version directory + atomic catalog pointer swap (what
   * table formats do for you), and a keyed MERGE shuffles both sides on
@@ -396,13 +347,9 @@ object Upsert {
     require(changes.columns.contains(opCol), s"changelog needs '$opCol'")
     require(changes.columns.contains(seqCol), s"changelog needs '$seqCol'")
     val dataCols = changes.columns.filter(c => c != opCol && c != seqCol)
-    val scratchRoot =
-      s"${spark.conf.get("spark.sql.warehouse.dir")}/__cdc_stage/" +
-        table.replace('.', '_')
     // the RAW changelog stages first (one evaluation of the source
     // plan), and validation + dedup both read the staged copy
-    changes.write.mode(SaveMode.Overwrite).parquet(s"$scratchRoot/raw")
-    val raw = spark.read.parquet(s"$scratchRoot/raw")
+    val raw = Rewrite.stage(spark, "__cdc_stage", table, "raw", changes)
     // op values are validated EAGERLY and on the RAW feed: a NULL (or
     // unknown) op would be excluded from upserts (=!= 'D' is
     // null-false) AND from the delete count, yet its key still lands in
@@ -425,10 +372,9 @@ object Upsert {
     // the deduped survivors stage too: four consumers below (upserts,
     // delete count, changed keys, the records count) would otherwise
     // re-run the window per action
-    raw.withColumn("_rn", org.apache.spark.sql.functions.row_number().over(w))
-      .filter(col("_rn") === 1).drop("_rn")
-      .write.mode(SaveMode.Overwrite).parquet(s"$scratchRoot/latest")
-    val staged = spark.read.parquet(s"$scratchRoot/latest")
+    val staged = Rewrite.stage(spark, "__cdc_stage", table, "latest",
+      raw.withColumn("_rn", org.apache.spark.sql.functions.row_number().over(w))
+        .filter(col("_rn") === 1).drop("_rn"))
     val upserts = staged.filter(col(opCol) =!= "D")
       .select(dataCols.map(col).toSeq: _*)
     val deletes = staged.filter(col(opCol) === "D").count()
@@ -443,12 +389,9 @@ object Upsert {
     // replacing, and a null-keyed delete was a counted no-op
     // (round-10 advice)
     val cond = keys.map(k => target(k) <=> changedKeys(k)).reduce(_ && _)
-    val merged = target.join(changedKeys, cond, "left_anti")
-      .unionByName(upserts.select(target.columns.map(col).toSeq: _*))
-    merged.write.mode(SaveMode.Overwrite).parquet(s"$scratchRoot/merged")
-    spark.read.parquet(s"$scratchRoot/merged").write.mode(SaveMode.Overwrite)
-      .saveAsTable(table)
-    spark.catalog.refreshTable(table)
+    Rewrite.overwrite(spark, "__cdc_stage", table,
+      target.join(changedKeys, cond, "left_anti")
+        .unionByName(upserts.select(target.columns.map(col).toSeq: _*)))
     (staged.filter(col(opCol) =!= "D").count(), deletes)
   }
 
@@ -463,9 +406,11 @@ object Upsert {
     * evolution). This is the
     * metadata-driven-ETL lifecycle case the strict upsert rejects: the
     * upstream added a field, tomorrow's batches carry it, and the
-    * pipeline must not stop. Implementation: pad EACH side to the
-    * UNION of the two schemas with typed NULL columns, then run the
-    * standard staged anti-join + union merge.
+    * pipeline must not stop. Implementation: the standard staged
+    * anti-join + union merge, with the union padding EACH side to the
+    * union of the two schemas with typed NULL columns;
+    * [[Rewrite.overwrite]] then adds the new columns to the table
+    * (`ADD COLUMNS`, no full-table rewrite of its own).
     */
   def upsertTableEvolving(spark: SparkSession, table: String,
       source: DataFrame, keys: Seq[String]): Long = {
@@ -486,36 +431,15 @@ object Upsert {
         "additive-only (new columns), never a type change — " +
         conflicts.map(c => s"$c: ${target.schema(c).dataType.simpleString} " +
           s"vs batch ${source.schema(c).dataType.simpleString}").mkString("; "))
-    val newCols = sCols.filterNot(tCols.contains)
-    val missingCols = tCols.filterNot(sCols.contains)
-    val widened =
-      if (newCols.isEmpty) target
-      else newCols.foldLeft(target) { (df, c) =>
-        df.withColumn(c, lit(null).cast(source.schema(c).dataType))
-      }
-    val padded =
-      if (missingCols.isEmpty) source
-      else missingCols.foldLeft(source) { (df, c) =>
-        df.withColumn(c, lit(null).cast(target.schema(c).dataType))
-      }
-    if (newCols.nonEmpty) {
-      // rewrite the catalog entry to the widened schema FIRST (staged —
-      // a table cannot feed its own overwrite), then the plain upsert
-      // sees schema-identical sides
-      val scratch =
-        s"${spark.conf.get("spark.sql.warehouse.dir")}/__evolve_stage/" +
-          table.replace('.', '_')
-      widened.write.mode(SaveMode.Overwrite).parquet(scratch)
-      spark.read.parquet(scratch).write.mode(SaveMode.Overwrite)
-        .saveAsTable(table)
-      spark.catalog.refreshTable(table)
-    }
-    upsertTable(spark, table, padded.select(
-      spark.table(table).columns.map(col).toSeq: _*), keys)
+    upsert(spark, table, source, keys, evolve = true)
   }
 
   def upsertTable(spark: SparkSession, table: String, source0: DataFrame,
-      keys: Seq[String]): Long = {
+      keys: Seq[String]): Long =
+    upsert(spark, table, source0, keys, evolve = false)
+
+  private def upsert(spark: SparkSession, table: String, source0: DataFrame,
+      keys: Seq[String], evolve: Boolean): Long = {
     // the raw-count observation sits UNDER the dedup window, so the one
     // staged write both dedupes and counts the pre-dedup batch
     val obs = new org.apache.spark.sql.Observation()
@@ -535,8 +459,6 @@ object Upsert {
       source.write.saveAsTable(table)
       return obs.get("rows").asInstanceOf[Long]
     }
-    val scratchRoot = s"${spark.conf.get("spark.sql.warehouse.dir")}/__upsert_stage/" +
-      table.replace('.', '_')
     // driver-local sources (literal rows — e.g. the 1-row control-table
     // updates) are free to evaluate twice; skip the staging write that
     // exists to keep an EXPENSIVE model plan from computing once per
@@ -546,8 +468,8 @@ object Upsert {
     val (staged, batch) =
       if (isDriverLocal) (source, source0.count())
       else {
-        source.write.mode(SaveMode.Overwrite).parquet(s"$scratchRoot/src")
-        (spark.read.parquet(s"$scratchRoot/src"), obs.get("rows").asInstanceOf[Long])
+        val s = Rewrite.stage(spark, "__upsert_stage", table, "src", source)
+        (s, obs.get("rows").asInstanceOf[Long])
       }
     val target = spark.table(table)
     // <=> (null-safe): a null-keyed source row must REPLACE a null-keyed
@@ -555,14 +477,11 @@ object Upsert {
     // anti-join (and the dedup window above already groups null keys
     // together, so the two stages agree on what "same key" means)
     val cond = keys.map(k => target(k) <=> staged(k)).reduce(_ && _)
-    val merged = target.join(staged, cond, "left_anti")
-      .unionByName(staged.select(target.columns.map(col).toSeq: _*))
-    merged.write.mode(SaveMode.Overwrite).parquet(s"$scratchRoot/merged")
-    spark.read.parquet(s"$scratchRoot/merged").write.mode(SaveMode.Overwrite)
-      .saveAsTable(table)
-    // the overwrite leaves a stale cached file index behind the catalog
-    // entry — readers would hit FILE_NOT_EXIST without this
-    spark.catalog.refreshTable(table)
+    // evolving: each side reads the other's extra columns as NULL
+    Rewrite.overwrite(spark, "__upsert_stage", table,
+      target.join(staged, cond, "left_anti").unionByName(
+        if (evolve) staged else staged.select(target.columns.map(col).toSeq: _*),
+        allowMissingColumns = evolve))
     batch
   }
 }

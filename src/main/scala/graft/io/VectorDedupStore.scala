@@ -193,13 +193,11 @@ object VectorDedupStore {
         s"vector dedup store '$table' has no model table " +
           s"'${modelTable(table)}' — the frozen calibration is half the " +
           "store; restore it or rebuild the store")
-      for (id <- epochId; c <- DedupStore.committedEpoch(spark, table)) {
-        if (c == id) return DedupStore.FoldResult(applied = false, batchRows = 0L)
-        if (c > id) throw new IllegalStateException(
-          s"vector-dedup-store fold for '$table': batch epoch $id is OLDER " +
-            s"than the committed epoch $c — recompute the store in epoch " +
-            "order or re-stamp the batch with a current epoch")
-      }
+      if (!EpochFence.admit("vector-dedup-store fold", table, epochId,
+          DedupStore.committedEpoch(spark, table),
+          "recompute the store in epoch order or re-stamp the batch with " +
+            "a current epoch"))
+        return DedupStore.FoldResult(applied = false, batchRows = 0L)
     }
 
     val bu = Similarity.withUnitVector(
@@ -326,23 +324,13 @@ object VectorDedupStore {
       .withColumn("_epoch", lit(epochId.getOrElse(-1L)))
       .select("vec_id", "qv", "cell", "_epoch")
 
-    // stage before touching the catalog (the survivor plan reads the
-    // store table it appends to), exactly as the text store does.
-    // Founding folds write DIRECTLY (exists=false ⇒ the survivor plan
-    // reads no store table; the scratch round-trip bought nothing —
-    // DedupStore's r19 note)
-    // append folds sever the read-own-table cycle with an EAGER
-    // localCheckpoint (r20, guide §6 — DedupStore's note): same
-    // barrier the __maint_stage parquet round-trip provided, minus a
-    // parquet encode + write + read + fs delete per fold; blocks are
-    // tracked and drain with the fold's cache mark
+    // founding folds write DIRECTLY; append folds go through the
+    // store append barrier (Rewrite.barrier), as in the text store
     if (!exists)
       survivors.write.mode(SaveMode.ErrorIfExists)
         .format("parquet").saveAsTable(table)
     else
-      org.apache.spark.sql.GraftColumnBridge.packedForWrite(
-        track(survivors.localCheckpoint(true)))
-        .write.mode(SaveMode.Append)
+      Rewrite.barrier(survivors).write.mode(SaveMode.Append)
         .format("parquet").saveAsTable(table)
     // one catalog round-trip for both properties (each ALTER is a
     // serial driver-side write)
@@ -430,19 +418,19 @@ object VectorDedupStore {
     * creation (spec-pinned).
     *
     * Crash contract (two catalog writes, no transaction): both writes
-    * are INSERT OVERWRITE into the EXISTING tables — never
-    * drop-and-recreate — so the job-commit protocol keeps the old rows
-    * until commit and neither table ever disappears (a vanished store
-    * would send the next fold down its founding branch and silently
-    * re-found the store from one day's batch). The model installs
-    * FIRST, so a crash between the writes leaves stored cells assigned
-    * by the old model while probes rank the new one — RECALL-DEGRADED,
-    * never corrupt (a missed near-dup appends a duplicate; nothing is
-    * lost or mis-scored). Training is deterministic (lowest-id seeds,
-    * lowest-id tie-breaks), so re-running the task converges: same
-    * codes → same model → the store rewrite completes. Each applied
-    * half stages under `__retrain_stage` first (the survivor plans
-    * read the tables they overwrite); the table's specs and `graft.*`
+    * are [[Rewrite.overwrite]]s into the EXISTING tables — never
+    * drop-and-recreate — so neither table ever disappears (a vanished
+    * store would send the next fold down its founding branch and
+    * silently re-found the store from one day's batch); a crash DURING
+    * a write leaves that table emptied, with its staged copy under
+    * `__retrain_stage` the complete one (Rewrite's crash posture). The
+    * model installs FIRST, so a crash between the writes leaves stored
+    * cells assigned by the old model while probes rank the new one —
+    * RECALL-DEGRADED, never corrupt (a missed near-dup appends a
+    * duplicate; nothing is lost or mis-scored). Training is
+    * deterministic (lowest-id seeds, lowest-id tie-breaks), so
+    * re-running the task converges: same codes → same model → the
+    * store rewrite completes. The table's specs and `graft.*`
     * properties — including the epoch fence — survive untouched
     * because the table definition is never dropped. CONVERGED retrains
     * skip the rewrites entirely: when the k-means reproduces the
@@ -482,8 +470,7 @@ object VectorDedupStore {
     // (advice-caught)
     if (!spark.catalog.tableExists(modelTable(table))) {
       val stage = new org.apache.hadoop.fs.Path(
-        s"${spark.conf.get("spark.sql.warehouse.dir")}/__retrain_stage/" +
-          table.replace('.', '_') + "/model")
+        Rewrite.dir(spark, "__retrain_stage", table) + "/model")
       val fs = stage.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(stage)) {
         spark.read.parquet(stage.toString)
@@ -565,52 +552,35 @@ object VectorDedupStore {
     if (!modelChanged && moved == 0L)
       return RetrainResult(model0.count(), rows, 0L)
 
-    // stage BOTH halves before touching the catalog (the reassignment
-    // plan reads the store table the rewrite overwrites), then apply
-    // model-first per the crash contract above. Both catalog writes
-    // are INSERT OVERWRITE (insertInto), never drop-and-recreate:
-    // saveAsTable(Overwrite) drops the table first, so a crash
-    // mid-write would leave NO store — and the next gold fold's
-    // exists=false branch would silently RE-FOUND it from one day's
-    // batch, losing every accumulated near-dup (review-caught). With
-    // insertInto the job-commit protocol keeps the OLD rows until
-    // commit, the table (with its specs and the epoch-fence property)
-    // always exists, and a crashed retrain re-runs to convergence.
-    // The one exception: migrating a LEGACY cv model changes the model
-    // table's schema, which insertInto cannot do — that path keeps the
-    // drop-and-recreate window, documented, paid once per migration.
-    val scratch = s"${spark.conf.get("spark.sql.warehouse.dir")}/__retrain_stage/" +
-      table.replace('.', '_')
+    // apply model-first per the crash contract above, both halves
+    // staged under the STORE's __retrain_stage dir (the recovery path
+    // above reads the model from there). The one drop-and-recreate:
+    // migrating a LEGACY cv model drops the cv column, which a rewrite
+    // never does — that window is documented and paid once per
+    // migration, and the recovery reinstall above covers it
     if (modelChanged) {
-      newModel.write.mode(SaveMode.Overwrite).parquet(s"$scratch/model")
-      val stagedModel = spark.read.parquet(s"$scratch/model")
       if (legacyCv)
-        stagedModel.write.mode(SaveMode.Overwrite).format("parquet")
+        Rewrite.stage(spark, "__retrain_stage", table, "model", newModel)
+          .write.mode(SaveMode.Overwrite).format("parquet")
           .saveAsTable(modelTable(table))
       else
-        stagedModel
-          .select(spark.table(modelTable(table)).columns.map(col): _*)
-          .write.mode(SaveMode.Overwrite).insertInto(modelTable(table))
-      spark.catalog.refreshTable(modelTable(table))
+        Rewrite.overwrite(spark, "__retrain_stage", modelTable(table),
+          newModel, name = "model", stagedAs = Some(table))
     }
     // the store rewrite is gated on moved > 0: with no home cell
     // changing, the rewrite would byte-replace the table with itself —
     // pure crash-window exposure for zero information
-    if (moved > 0L) {
-      reassigned.drop("_old_cell")
-        .write.mode(SaveMode.Overwrite).parquet(s"$scratch/store")
-      spark.read.parquet(s"$scratch/store")
-        .select(spark.table(table).columns.map(col): _*)
-        .write.mode(SaveMode.Overwrite).insertInto(table)
-      spark.catalog.refreshTable(table)
-    }
+    if (moved > 0L)
+      Rewrite.overwrite(spark, "__retrain_stage", table,
+        reassigned.drop("_old_cell"), name = "store")
     // SUCCESSFUL retrain: sweep the stage dir NOW instead of waiting
     // for vacuum_staging — a staged model that outlives its apply can
     // be silently resurrected by the crash-recovery reinstall above
     // when an operator INTENTIONALLY drops the model table to force a
     // rebuild (advice-caught). Crashed retrains never reach this line,
     // so the recovery copy survives exactly as long as it is needed
-    val scratchPath = new org.apache.hadoop.fs.Path(scratch)
+    val scratchPath = new org.apache.hadoop.fs.Path(
+      Rewrite.dir(spark, "__retrain_stage", table))
     scratchPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .delete(scratchPath, true)
     RetrainResult(spark.table(modelTable(table)).count(), rows, moved)

@@ -167,14 +167,9 @@ object ZoneMaps {
       if (newFiles.isEmpty) None
       else Some(manifestFor(spark,
         spark.read.schema(schema).parquet(newFiles: _*), newFiles, cols))
-    val merged = fresh.fold(kept)(kept.unionByName(_))
-    val scratch = s"${spark.conf.get("spark.sql.warehouse.dir")}/__zonemap_stage/" +
-      mt.replace('.', '_')
-    try merged.write.mode(SaveMode.Overwrite).parquet(scratch)
+    try Rewrite.overwrite(spark, "__zonemap_stage", mt,
+      fresh.fold(kept)(kept.unionByName(_)))
     finally graft.operators.FrameCaches.releaseSince(spark, cacheMark)
-    spark.read.parquet(scratch)
-      .write.mode(SaveMode.Overwrite).saveAsTable(mt)
-    spark.catalog.refreshTable(mt)
     (mt, newFiles.size.toLong, spark.table(mt).count())
   }
 

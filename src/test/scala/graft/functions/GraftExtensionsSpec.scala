@@ -127,6 +127,18 @@ class GraftExtensionsSpec extends SparkSpec {
       s"unexpected error: ${e.getMessage}")
   }
 
+  test("sorted_long_intersect refuses arrays that may hold null elements") {
+    val rows = Seq((Seq(1L, 2L), Seq[java.lang.Long](0L, null))).toDF("a", "b")
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      rows.select(TextExpressions.sortedLongIntersect(col("a"), col("b")))
+        .collect()
+    }
+    assert(e.getMessage.contains("null-free"), s"unexpected error: ${e.getMessage}")
+    // the null-free typing the triangle close feeds it still resolves
+    assert(rows.select(TextExpressions.sortedLongIntersect(col("a"), col("a")))
+      .as[Seq[Long]].head() == Seq(1L, 2L))
+  }
+
   test("builder-time extension wires the same list without throwing") {
     // withExtensions applies at session CREATION, which a shared-session
     // suite cannot exercise; the wiring itself (every injectFunction

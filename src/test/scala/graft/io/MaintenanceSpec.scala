@@ -252,6 +252,36 @@ class MaintenanceSpec extends SparkSpec {
       .collect().toSet == Set(("a", 15L)), "replay leaked into the standing sums")
   }
 
+  test("an epoch-stamped fold into a marker-less table gains the marker, then fences a replay") {
+    val t = table("t_gold_late_marker")
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    Maintenance.maintainAdditiveAggregate(spark, t,
+      Seq(("a", 10L)).toDF("g", "qty"), Seq("g"), Seq("qty"))
+    assert(!spark.table(t).columns.contains("_last_epoch"), "setup: no marker")
+    assert(Maintenance.maintainAdditiveAggregate(spark, t,
+      Seq(("a", 1L)).toDF("g", "qty"), Seq("g"), Seq("qty"),
+      epochId = Some(3L)))
+    assert(spark.table(t).agg(max($"_last_epoch")).as[Long].head() == 3L,
+      "the epoch-stamped fold must add the marker column")
+    assert(!Maintenance.maintainAdditiveAggregate(spark, t,
+      Seq(("a", 1L)).toDF("g", "qty"), Seq("g"), Seq("qty"),
+      epochId = Some(3L)), "a same-epoch replay must skip")
+    assert(spark.table(t).select("g", "qty", "n_rows").as[(String, Long, Long)]
+      .collect().toSet == Set(("a", 11L, 2L)))
+  }
+
+  test("a decimal additive fold keeps the standing column type") {
+    val t = table("t_gold_decimal")
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    val batch = Seq(("a", BigDecimal("1.25"))).toDF("g", "amt")
+      .select($"g", $"amt".cast("decimal(10,2)").as("amt"))
+    Maintenance.maintainAdditiveAggregate(spark, t, batch, Seq("g"), Seq("amt"))
+    val standing = spark.table(t).schema("amt").dataType
+    Maintenance.maintainAdditiveAggregate(spark, t, batch, Seq("g"), Seq("amt"))
+    assert(spark.table(t).schema("amt").dataType == standing)
+    assert(spark.table(t).select("amt").as[BigDecimal].head() == BigDecimal("2.50"))
+  }
+
   test("compact splits a hot partition value across files (target honored within value)") {
     val t = table("t_compact_hot")
     spark.sql(s"DROP TABLE IF EXISTS $t")

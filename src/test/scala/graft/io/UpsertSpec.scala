@@ -152,6 +152,39 @@ class UpsertSpec extends SparkSpec {
       Set((Some(1), "a")), "null-keyed delete must actually delete")
   }
 
+  test("merges keep the table's partition spec and graft.* properties") {
+    val t = table("t_specs")
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    Seq((1, "a", "d1"), (2, "b", "d2")).toDF("k", "v", "d")
+      .write.partitionBy("d").saveAsTable(t)
+    spark.sql(s"ALTER TABLE $t SET TBLPROPERTIES ('graft.marker' = 'kept')")
+    def assertSpecs(after: String): Unit = {
+      val meta = spark.sessionState.catalog.getTableMetadata(
+        spark.sessionState.sqlParser.parseTableIdentifier(t))
+      assert(meta.partitionColumnNames == Seq("d"),
+        s"$after dropped the partition spec: ${meta.partitionColumnNames}")
+      assert(meta.properties.get("graft.marker").contains("kept"),
+        s"$after dropped the graft.* property")
+    }
+    Upsert.upsertTable(spark, t,
+      Seq((2, "b2", "d2"), (3, "c", "d3")).toDF("k", "v", "d"), Seq("k"))
+    assertSpecs("upsertTable")
+    Upsert.applyChangeLog(spark, t,
+      Seq((1, "a", "d1", "D", 1L), (4, "e", "d1", "I", 2L))
+        .toDF("k", "v", "d", "op", "seq"), Seq("k"))
+    assertSpecs("applyChangeLog")
+    Upsert.upsertTableEvolving(spark, t,
+      Seq((5, "f", "d3", 1.5)).toDF("k", "v", "d", "w"), Seq("k"))
+    assertSpecs("upsertTableEvolving")
+    val rows = spark.table(t).select("k", "v", "d", "w")
+      .as[(Int, String, String, Option[Double])].collect().toSet
+    assert(rows == Set((2, "b2", "d2", None), (3, "c", "d3", None),
+      (4, "e", "d1", None), (5, "f", "d3", Some(1.5))), s"got $rows")
+    val scanned = spark.table(t).filter($"d" === "d3").inputFiles
+    assert(scanned.nonEmpty && scanned.forall(_.contains("d=d3")),
+      s"partition pruning lost: ${scanned.mkString(", ")}")
+  }
+
   test("composite keys match on the full conjunction") {
     val t = table("t_comp")
     spark.sql(s"DROP TABLE IF EXISTS $t")
